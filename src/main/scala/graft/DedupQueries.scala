@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite (SURVEY §2.C) over `documents`.
@@ -13,6 +13,13 @@ import org.apache.spark.sql.functions._
 object DedupQueries {
 
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+
+  /** Bucket id `idCol DIV width`, in exact integer arithmetic. A double
+    * division then cast rounds ids above 2^53, e.g. (2^54 - 1) / 2^14
+    * lands in bucket 2^40 instead of 2^40 - 1.
+    */
+  private[graft] def bucketOf(idCol: String, width: Long): Column =
+    expr(s"$idCol DIV $width")
 
   /** Lowercased word tokens as an array column. */
   private[graft] val tokensCol = expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x <> '')")
@@ -540,7 +547,7 @@ object DedupQueries {
     val gramCodes = GraftBridge.column(
       graft.functions.GramCodeArrayExpr(GraftBridge.expression(col("text")), 3))
     val grams = docs(s, dir).select(col("doc_id"), gramCodes.as("g"))
-      .withColumn("bk", (col("doc_id") / lit(B)).cast("long"))
+      .withColumn("bk", bucketOf("doc_id", B))
       .withColumn("cp", lit(false))
     val lookahead = grams
       .filter(pmod(col("doc_id"), lit(B)) < maxOff && col("bk") > 0)
@@ -1403,7 +1410,7 @@ object DedupQueries {
     val docFrame = feat
       .withColumn("bh", bhExpr)
       .select(col("doc_id"), col("ps"), col("bh"))
-      .withColumn("bk", (col("doc_id") / lit(B)).cast("long"))
+      .withColumn("bk", bucketOf("doc_id", B))
       .withColumn("cp", lit(false))
     val lookahead = docFrame
       .filter(pmod(col("doc_id"), lit(B)) < windowW && col("bk") > 0)

@@ -41,14 +41,13 @@ object Graft {
     val s = SparkSession.builder()
       .master(master)
       .appName(appName)
-      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", parts)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config(Tables.NanosAsLongKey, "true")
       .getOrCreate()
-    // extensions only apply to newly-built sessions; a pre-existing
-    // session returned by getOrCreate still needs the registry path
+    // the session hooks cover both a fresh session and a pre-existing
+    // one returned by getOrCreate
     install(s)
     // getOrCreate silently ignores builder configs on a pre-existing
     // session — re-apply the mutable, semantics-affecting ones so the

@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected queries so the
-  * shuffle/broadcast/pushdown story can be audited (SURVEY §4).
+  * shuffle/broadcast/pushdown story can be audited (SURVEY §4). The
+  * session is the bench's (`Graft.session` on SPARK_GRAFT_CPUS cores)
+  * and the default SF is the bench's, so the plans are the measured ones.
   * Usage: runMain graft.PlanAudit [sfDir] [query ...]
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq(
       "q1_agg", "q2_filter_project", "q3_join_agg", "q5_multi_join",
       "q18_asof_join", "q23_asof_native", "q26_ntile",
@@ -22,12 +22,8 @@ object PlanAudit {
       "q53_interpolate", "q54_scd2", "q55_funnel", "knn_mmr",
       "text_hash_features", "pipeline_pagerank", "sketch_hll_rolling",
       "src_compact_small_files", "mm_png_decode", "ecs_flocking")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = Some(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

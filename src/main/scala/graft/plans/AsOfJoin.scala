@@ -236,15 +236,9 @@ case class AsOfJoinExec(
   // as their own codegen stages, exactly the pre-codegen behavior).
   // ------------------------------------------------------------------
 
-  private lazy val codegenPath: Boolean =
+  override lazy val supportCodegen: Boolean =
     longGetter(leftTime.dataType).isDefined &&
       leftKeys.forall(k => codegenKeyType(k.dataType))
-
-  // GRAFT_ASOF_INTERPRETED disables only this operator's codegen —
-  // the measured A/B hook (spark.sql.codegen.wholeStage would turn
-  // off every operator's, which isn't the comparison that matters)
-  override def supportCodegen: Boolean =
-    codegenPath && !sys.env.contains("GRAFT_ASOF_INTERPRETED")
 
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     left.execute() :: right.execute() :: Nil
@@ -701,6 +695,8 @@ object AsOfJoin {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    // same order as install: pushdown before pruning
+    e.injectOptimizerRule(_ => PushAsOfJoinFilters)
     e.injectOptimizerRule(_ => PruneAsOfJoinColumns)
     graft.functions.GraftFunctions.all.foreach { case (name, usage, builder) =>
       e.injectFunction((

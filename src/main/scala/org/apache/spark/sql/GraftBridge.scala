@@ -45,6 +45,17 @@ object GraftBridge {
       org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.clone())
   }
 
+  /** The optimizer rules an extensions installer injects, in injection
+    * order (`buildOptimizerRules` is `private[sql]`).
+    */
+  def injectedOptimizerRules(ext: SparkSessionExtensions => Unit,
+      spark: SparkSession)
+      : Seq[org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]] = {
+    val e = new SparkSessionExtensions
+    ext(e)
+    e.buildOptimizerRules(spark)
+  }
+
   /** The materialized RDD behind a (local)checkpointed DataFrame, for
     * explicit block release — `Dataset.unpersist` doesn't reach
     * checkpoint blocks (they aren't in the CacheManager).

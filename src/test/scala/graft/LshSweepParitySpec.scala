@@ -42,4 +42,14 @@ class LshSweepParitySpec extends SparkSpec {
     assert(out.map(_(2)) sameElements naive.map(_._2)) // n_candidates
     assert(out.map(_(3)) sameElements naive.map(_._3)) // windowed
   }
+
+  test("window bucket ids divide in integers, exact above 2^53") {
+    import spark.implicits._
+    val B = 1L << 14
+    val id = (1L << 54) - 1
+    val bk = Seq(id).toDF("doc_id")
+      .select(DedupQueries.bucketOf("doc_id", B)).head().getLong(0)
+    assert(bk == (1L << 40) - 1)
+    assert(bk == id / B)
+  }
 }

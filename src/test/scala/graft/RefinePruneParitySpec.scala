@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * top-k — and a pruned candidate that also lives in the base edge
   * list survives through the base side with the bit-identical cos.
   * This pins pruned == unpruned on real embeddings, two refine rounds
-  * deep (the exact shape knn_graph runs).
+  * deep (the exact shape knn_graph runs), and that every round emits
+  * exactly one row per (qid, nid) on both legs.
   */
 class RefinePruneParitySpec extends SparkSpec {
 
@@ -28,6 +29,14 @@ class RefinePruneParitySpec extends SparkSpec {
         .refineOnce(base, e, "vec_id", "v", k = 3, prune = prune)
       val r2 = graft.operators.RandomHyperplaneLsh
         .refineOnce(r1, e, "vec_id", "v", k = 3, prune = prune)
+      // the merged list dedups on (qid, nid, cos): a drift between the
+      // base and re-scored cos of one pair would surface here as a
+      // repeated (qid, nid) edge
+      Seq(r1, r2).foreach { r =>
+        val repeated = r.groupBy(col("qid"), col("nid")).count()
+          .filter(col("count") > 1).count()
+        assert(repeated == 0, s"prune=$prune: $repeated (qid, nid) pairs repeat")
+      }
       r2.select(col("qid"), col("rn"), col("nid"),
           (round(col("cos"), 4) + lit(0.0)).as("cos"))
         .orderBy(col("qid"), col("rn")).collect().map(_.toSeq)

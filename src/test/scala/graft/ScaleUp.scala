@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-scale dataset (10× sf0.1) for the scaling probe.
@@ -51,17 +51,12 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorStr) = args.take(3)
     val factor = factorStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS): read it as raw longs (exactly as
-      // Tables.load does) and write it back as BIGINT — `ts DIV 1000`
-      // conversion downstream handles both encodings
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // Graft.session sets Tables.NanosAsLongKey: events.ts is
+    // TIMESTAMP(NANOS), read as raw longs (exactly as Tables.load does)
+    // and written back as BIGINT — `ts DIV 1000` conversion downstream
+    // handles both encodings
+    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
 
     def replicated(table: String, df: DataFrame): DataFrame =

@@ -99,5 +99,10 @@ class SqlFunctionsSpec extends SparkSpec {
     val est = spark.range(0, 50)
       .agg(org.apache.spark.sql.GraftBridge.column(agg)).head().getLong(0)
     assert(est == 50L)
+    // the same installer carries the as-of optimizer rules, in the
+    // order AsOfJoin.install adds them: pushdown before pruning
+    val rules = org.apache.spark.sql.GraftBridge.injectedOptimizerRules(
+      new graft.plans.GraftExtensions(), spark)
+    assert(rules == Seq(graft.plans.PushAsOfJoinFilters, graft.plans.PruneAsOfJoinColumns))
   }
 }
